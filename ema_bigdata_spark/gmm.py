@@ -32,14 +32,12 @@ not reproduce them).
 from __future__ import annotations
 
 import math
-import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ema_bigdata_spark.functions.gaussian import DENSITY_FLOOR, wdens
-from ema_bigdata_spark.sources.tables import load_table
 
 #: reference converged when Δ lnP ≤ 80 absolute (Main.scala:89) — a
 #: dataset-size-dependent threshold; ours is configurable.
@@ -183,11 +181,9 @@ def _init_params_hist(
 #: Order-independent (integer sums), range-equivalent to DECIMAL(38,0)
 #: (4 limbs cover |d| < 2^126 ≈ 8.5e37), and bit-identical to the
 #: decimal path's result (equivalence-tested).  Limb-sum overflow is
-#: impossible while bins < 2^29 (top-limb |q3| < 2^33, Σ < 2^62); the
+#: impossible while bins < 2^29 (top-limb |q0| < 2^33, Σ < 2^62); the
 #: bin count is known from the init aggregate, so wider histograms
 #: fall back to the decimal path instead of silently wrapping.
-#: ``SPARK_GRAFT_EM_DECIMAL=1`` forces the decimal path (A/B lever and
-#: the equivalence test's hook).
 _LIMB_SHIFTS = (93, 62, 31, 0)
 _LIMB_MAX_BINS = 1 << 29
 
@@ -201,9 +197,13 @@ def _em_quantized_terms(resp: DataFrame, names: dict[str, str]) -> DataFrame:
     measured ~0.27 s/iteration on the 1.73 M-bin fixture; the
     ``u − u % 1.0`` truncation below is plain double arithmetic and
     EXACT — IEEE fmod never rounds, and trunc == floor on the
-    non-negative ``u``).  ``a`` stays a DOUBLE column: ``floor()``'s
-    BIGINT return would ANSI-overflow for terms beyond 2^63·1e-12,
-    which in-domain sufficient statistics legitimately exceed."""
+    non-negative ``u``).  Where the ``+ 0.5`` itself rounds across an
+    integer boundary, ``a`` can sit one 1e-12 quantum away from the
+    pre-r13 ``round()`` (BigDecimal HALF_UP on the exact double) —
+    deterministic, and identical on both sum paths.  ``a`` stays a
+    DOUBLE column: ``floor()``'s BIGINT return would ANSI-overflow for
+    terms beyond 2^63·1e-12, which in-domain sufficient statistics
+    legitimately exceed."""
     t = resp.select(
         *[F.expr(expr).alias(f"t_{n}") for n, expr in names.items()]
     )
@@ -230,7 +230,7 @@ def _em_quantized_terms(resp: DataFrame, names: dict[str, str]) -> DataFrame:
 
 def _em_stats_decimal(resp: DataFrame, names: dict[str, str]) -> dict:
     """DECIMAL(38,0) exact fixed-point sums (the pre-r13 form, kept as
-    the wide-histogram fallback and A/B hook): sum the quantized
+    the wide-histogram fallback): sum the quantized
     per-bin integers as Decimal128 — associative, so the result is
     identical under ANY partitioning."""
     q = _em_quantized_terms(resp, names)
@@ -325,10 +325,7 @@ def _distributed_em(
         hist = spread(hist).cache()
     try:
         phi, mu, s2, n, nbins = _init_params_hist(hist, k)
-        use_decimal = (
-            nbins >= _LIMB_MAX_BINS
-            or os.environ.get("SPARK_GRAFT_EM_DECIMAL") == "1"
-        )
+        use_decimal = nbins >= _LIMB_MAX_BINS
 
         lnp_prev = None
         trace: list[float] = []
@@ -363,7 +360,7 @@ def _distributed_em(
             # hence identical under ANY partitioning; raw double sums
             # are order-dependent).  The limb form is the fast path
             # (plain int64 adds); the decimal form is the wide-histogram
-            # fallback and A/B hook (_LIMB_SHIFTS note).
+            # fallback (_LIMB_SHIFTS note).
             stat_names = {}
             for j in range(k):
                 stat_names[f"n{j}"] = f"g{j} * _c"
@@ -493,79 +490,3 @@ def gmm_fit(
     bounded-cardinality histogram (module docstring).  The cluster
     touches the full dataset exactly once per fit."""
     return gmm_fit_hist(value_histogram(df, x), k, tol, max_iter)
-
-
-def q_gmm_fit_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-r6 registered form of ``gmm_fit`` (numpy EM over the
-    histogram).  Since r6 the REGISTERED ``gmm_fit`` lives in
-    ``gmm_parity.py`` — a bit-exact cross-engine EM with a real DuckDB
-    oracle (libm exp/ln here diverge by 1 ulp between engines, which
-    iteration feedback amplifies; SURVEY §2.2 no longer exempts it).
-    This numpy path stays as the fast library API and equivalence
-    fixture.
-
-    Fixed iteration budget (tol=0 → always exactly 15 iterations) so
-    the query is deterministic AND its bench cost measures
-    per-iteration throughput, not convergence luck."""
-    model = gmm_fit(
-        load_table(spark, sf_dir, "events"), "value", k=3, tol=0.0, max_iter=15
-    )
-    rows = [
-        (j, round(model.weights[j], 6), round(model.means[j], 6),
-         round(model.variances[j], 6))
-        for j in range(3)
-    ]
-    return spark.createDataFrame(
-        rows, "component BIGINT, weight DOUBLE, mean DOUBLE, variance DOUBLE"
-    )
-
-
-def q_gmm_bic_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model selection over K via BIC = p·ln(n) − 2·lnL with
-    p = 3K−1 free parameters — fits K ∈ {2, 3, 4} with the same
-    one-job-per-iteration EM and reports each fit, lowest BIC first.
-
-    ONE histogram scan total: the ``(value, count)`` histogram is built
-    and collected once (n = Σcnt comes from it for free — no separate
-    ``count()`` job), then all three candidate fits iterate over the
-    same arrays driver-side; the marginal cost per extra K is numpy
-    iterations, not I/O.  The wide-domain fallback caches the histogram
-    so the distributed path also scans events exactly once.
-
-    INTENTIONAL (r2): n here is the histogram total, i.e. the count of
-    non-NULL values — the likelihood's actual sample size — not
-    ``ev.count()``, which would also count NULL rows the lnL term never
-    sees.  On data with NULLs the two differ and BIC shifts; the
-    null-excluding n is the statistically correct one."""
-    import math
-
-    ev = load_table(spark, sf_dir, "events").select("value")
-    hist = value_histogram(ev, "value")
-    wide = False
-    # Arrow head probe (r12 optimization, same rationale as
-    # gmm_fit_hist: batch the boundary crossing instead of pickling
-    # up to 1 M Rows)
-    head = hist.limit(MAX_DRIVER_BINS + 1).toArrow()
-    if head.num_rows > MAX_DRIVER_BINS:
-        wide = True
-        hist = hist.cache()  # one events scan shared by the K fits
-        n = hist.agg(F.sum("cnt")).collect()[0][0]
-    else:
-        n = int(_head_arrays(head)[1].sum())
-    rows = []
-    try:
-        for k in (2, 3, 4):
-            # equal 6-iteration budget per candidate: enough for the BIC
-            # ordering to stabilize on this data, and the selection query
-            # stays ~half the cost of the full flagship fit
-            m = gmm_fit_hist(hist, k=k, tol=0.0, max_iter=6, head=head)
-            p = 3 * k - 1
-            bic = p * math.log(n) - 2.0 * m.log_likelihood
-            rows.append((k, round(m.log_likelihood, 3), round(bic, 3)))
-    finally:
-        if wide:
-            hist.unpersist()
-    rows.sort(key=lambda r: r[2])
-    return spark.createDataFrame(
-        rows, "k BIGINT, log_likelihood DOUBLE, bic DOUBLE"
-    )

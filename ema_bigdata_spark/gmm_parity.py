@@ -10,11 +10,11 @@ hash-comparable — the same unrolled-iteration pattern already proven by
 ``q_pagerank`` and ``q_kmeans``, extended to transcendental-bearing EM.
 
 Parity posture:
-- per-row density math is SHARED SQL text (dialect differences limited
-  to ``transform``/``list_transform``, array constructor/indexing, and
-  parameters appearing as folded literals on Spark vs CTE column refs
-  on DuckDB — literals render via ``xmath.dlit_exact``, the
-  mantissa×2^k form immune to DuckDB's literal-parser ulp bug);
+- per-row density math is the oracle's SQL text (``iter_ctes``;
+  constants render via ``xmath.dlit_exact``, the mantissa×2^k form
+  immune to DuckDB's literal-parser ulp bug) and, on the Spark side,
+  its op-for-op numpy replay (``_e_step_kernel``: the same
+  parenthesization, ``+ − × ÷``, ``floor``, min/max only — no libm);
 - sufficient statistics are snapped to integers per bin
   (``floor(v·scale + 0.5)``) BEFORE summation, so the sums are
   order-free (partitioning-independent on Spark, identical on DuckDB);
@@ -28,11 +28,14 @@ Parity posture:
   runs as Python ``xln`` / a DuckDB CTE chain of the same ops.
 
 Spark-first shape (SURVEY §4.3): ONE distributed ``groupBy(value)``
-histogram scan (map-side combined — at 100 TB the only full pass),
-then one tiny aggregation job per EM iteration over the checkpointed
-histogram; shuffle volume is bin-count, never row-count.  The driver
-holds 3K floats of state.  The DuckDB oracle replays the identical
-computation as a flat materialized-CTE chain.
+histogram scan (map-side combined — at 100 TB the only full pass) and
+ONE init statement run in Spark; the E-steps run in numpy over the
+histogram — on the driver over a single ``toArrow`` collect when it
+has at most ``gmm.MAX_DRIVER_BINS`` bins, else per Arrow batch on the
+workers (``mapInArrow``) with the exact partial sums added
+driver-side.  Shuffle volume is bin-count, never row-count.  The
+DuckDB oracle replays the identical computation as a flat
+materialized-CTE chain.
 
 Reference: ``/root/reference`` ``Main.scala:59-92`` (EM loop; 5K+2
 full data passes per iteration — SURVEY §3.3).  Textbook math
@@ -46,6 +49,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ema_bigdata_spark import gmm
 from ema_bigdata_spark.functions import xmath as X
 from ema_bigdata_spark.registry import query
 from ema_bigdata_spark.sources.tables import load_table
@@ -165,30 +169,28 @@ def init_ctes(src: str, k: int, tag: str,
     return ctes, f"{tag}_i2"
 
 
-def iter_ctes(dialect: str, src: str, P: dict[str, str], k: int,
-              tag: str, mode: str) -> tuple[list[tuple[str, str]], str]:
-    """One EM pass over histogram ``src`` with parameter texts ``P``
-    (keys mu{j}, s2{j}, nrm{j} [, lnc{j} for mode='lnl']).  mode='fit'
-    emits the snapped sufficient-statistic sums n{j}u/sx{j}u/sxx{j}u;
-    mode='lnl' emits the snapped log-likelihood sum lnlu."""
+def iter_ctes(src: str, P: dict[str, str], k: int, tag: str,
+              mode: str) -> tuple[list[tuple[str, str]], str]:
+    """Oracle (DuckDB) text of one EM pass over histogram ``src`` with
+    parameter column refs ``P`` (keys mu{j}, s2{j}, nrm{j} [, lnc{j}
+    for mode='lnl']).  mode='fit' emits the snapped sufficient-statistic
+    sums n{j}u/sx{j}u/sxx{j}u; mode='lnl' emits the snapped
+    log-likelihood sum lnlu.  :func:`_e_step_kernel` is its op-for-op
+    numpy replay on the Spark side."""
     J = range(1, k + 1)
-    # Param texts are either plain column refs (oracle: the
-    # cross-joined 1-row params CTE — these must be CARRIED through
-    # the stage chain) or folded literal expressions (Spark — nothing
-    # to carry; see parity_em_spark's docstring for the measured
-    # literal-vs-view decision).
-    pnames = sorted({v for v in P.values() if v.isidentifier()})
-    pfwd = (", " + ", ".join(pnames)) if pnames else ""
+    # the params are columns of the cross-joined 1-row params CTE:
+    # CARRY them through the stage chain
+    pfwd = ", " + ", ".join(sorted(set(P.values())))
     zc = ", ".join(
         f"least(((x - {P[f'mu{j}']}) * (x - {P[f'mu{j}']}))"
         f" / (2.0 * {P[f's2{j}']}), {X.dlit_exact(X.EXP_CLAMP)}) AS zc{j}"
         for j in J
     )
-    zarr = X.arr([f"zc{j}" for j in J], dialect)
-    et = X.exp_neg_arr(zarr, dialect)
+    zarr = X.arr([f"zc{j}" for j in J], "duckdb")
+    et = X.exp_neg_arr(zarr, "duckdb")
     zfwd = ", ".join(f"zc{j}" for j in J)
     wcols = ", ".join(
-        f"{P[f'nrm{j}']} * {X.ix('et', j, dialect)} AS w{j}" for j in J
+        f"{P[f'nrm{j}']} * {X.ix('et', j, 'duckdb')} AS w{j}" for j in J
     )
     wfwd = ", ".join(f"w{j}" for j in J)
     rs = f"greatest({' + '.join(f'w{j}' for j in J)}, {_FLOOR})"
@@ -382,7 +384,7 @@ _SQL_R6 = "floor((({v}) * 1000000.0) + 0.5) / 1000000.0"
 _SQL_R3 = "floor((({v}) * 1000.0) + 0.5) / 1000.0"
 
 
-# ---- Spark-side driver loop ---------------------------------------------
+# ---- Spark-side EM loop -------------------------------------------------
 
 
 def _require_nonempty(n) -> None:
@@ -421,20 +423,24 @@ def _fresh_view(stem: str) -> str:
 
 
 def prepare_hist(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the (value, count) histogram once and return its
-    temp-view name.  ``coalesce(4)``: post-aggregation the histogram
-    is domain-bounded (~60 k bins for 2-decimal data regardless of row
-    count — gmm.py module docstring), so the 32 shuffle partitions
-    would cost 15-24 × 32 near-empty tasks across the iteration jobs;
-    four partitions keep per-iteration overhead at ~30 ms without
+    """Cache the (value, count) histogram and return its temp-view
+    name; the first statement over the view materializes it, and
+    dropping the view releases it.  ``cache()`` rather than an eager
+    ``localCheckpoint()``: the checkpoint is a Spark statement of its
+    own, while the cache fills inside the init statement that scans
+    the whole histogram anyway.  ``coalesce(4)``: post-aggregation the
+    histogram is domain-bounded (~60 k bins for 2-decimal data
+    regardless of row count — gmm.py module docstring), so the 32
+    shuffle partitions would cost 32 near-empty tasks per pass over
+    it; four partitions keep the per-pass overhead small without
     giving up distribution headroom for wide domains."""
     ev = load_table(spark, sf_dir, "events")
     ev_view = _fresh_view("v_gmm_events")
     ev.createOrReplaceTempView(ev_view)
     try:
-        # localCheckpoint is EAGER: the histogram is materialized
-        # here, so the events view has served its purpose
-        hist = spark.sql(hist_sql(ev_view)).coalesce(4).localCheckpoint()
+        # spark.sql analyzes eagerly: the events view is inlined into
+        # the histogram's plan, so it has served its purpose
+        hist = spark.sql(hist_sql(ev_view)).coalesce(4).cache()
     finally:
         # drop immediately (ADVICE r8): per-call names otherwise
         # accumulate in the session catalog for its whole lifetime
@@ -444,168 +450,224 @@ def prepare_hist(spark: SparkSession, sf_dir: str) -> str:
     return hist_view
 
 
-def parity_em_spark(spark: SparkSession, sf_dir: str, k: int, iters: int,
-                    want_lnl: bool = False, hist_view: str | None = None):
-    """Run the bit-exact EM on Spark: one histogram scan, then ONE
-    statement per iteration (SURVEY §4.3), params folded driver-side
-    with the Python mirrors between statements (``update_fold`` is the
-    op-for-op mirror of the oracle's ``update_ctes`` — same IEEE ops
-    on the same doubles).  Returns ``(nd, P, lnl)``.
+def _e_step_kernel():
+    """Build the E-step kernel: the numpy replay of :func:`iter_ctes`,
+    op for op, in both modes.
 
-    Params fold as literals — measured against the alternative (1-row
-    params temp view cross-joined for constant statement text): the
-    view costs a createDataFrame round-trip + a broadcast join per
-    iteration and times WORSE (9 s vs 5.5 s for the 15-iteration fit
-    at sf0.1).  A chunked variant (several iterations unrolled per
-    action, the update running as Spark-side ``update_ctes`` SQL) was
-    built in r7 to amortize the ~0.3 s/statement analyze+JIT fixed
-    cost and REMOVED in r9 after staying dormant at chunk=1: Catalyst
-    optimizer cost grows superlinearly with merged tree depth and the
-    chunk always lost (measured at sf0.1, 15-iteration fit: 4.2 s
-    per-iteration vs 5.7/7.5/28.6 s at chunk 3/5/15 — ROUND8_NOTES §9,
-    decision recorded per VERDICT r8 item 8).  Horizontal merging
-    (q_gmm_bic's across-K lockstep) keeps tree depth constant and
-    stays.
+    ``e_step(x, cnt, fits, lnl)`` takes one batch of bins (float64
+    values, int64 counts) and per fit a ``(mu, s2, nrm, lnc)`` tuple
+    of per-component floats (``lnc`` only read when ``lnl``).  It
+    returns an int64 ``(1 + stats, 2)`` array: row 0 counts the
+    per-bin snaps that fall outside int64 (each then counts as 0), and
+    for each statistic (fit mode: n/sx/sxx per component, in fit then
+    component order; lnl mode: one lnL sum per fit) a row holds the
+    batch's sums of the high and low 32-bit halves of the per-bin
+    snapped integers (exact in int64 while a batch holds < 2^31 bins).
+    Only ``+ − × ÷``, ``floor``, ``fmin``/``maximum`` and comparisons
+    touch the floats, so every per-bin value is IEEE-identical to the
+    oracle's, and the sums are integer sums — exact and order-free,
+    whatever the batch split.  SQL ``least``/``greatest`` order NaN above every number,
+    hence ``fmin`` (drops a NaN) and ``maximum`` (keeps it).
+
+    The overflow count (not an exception) lets a worker-side batch
+    report it to the driver, which refuses the fit with ``ValueError``
+    as the oracle's ``CAST(... AS BIGINT)`` does — where Spark's
+    ``floor`` would saturate silently.
+
+    The kernel is a ``<locals>`` closure over plain values on purpose
+    (the multimodal.py module-docstring rule): ``mapInArrow`` ships it
+    to workers by value, where this package may not be importable."""
+    n_sc, sx_sc, sxx_sc, lnl_sc = _N_SCF, _SX_SCF, _SXX_SCF, _LNL_SCF
+    floor_f, ln_floor = _FLOOR_F, math.log(1e-300)
+    clamp, inv_2_16 = X.EXP_CLAMP, X.INV_2_16
+    c3, c4 = X._EXP_C3, X._EXP_C4
+    atanh_c = tuple(1.0 / float(2 * m + 1) for m in range(1, 27))
+    lim = 2.0**63
+
+    def e_step(x, cnt, fits, lnl):
+        import numpy as np
+
+        def snap(v, scale):
+            f = np.floor((v * scale) + 0.5)
+            ok = (f >= -lim) & (f < lim)  # False for NaN too
+            out[0][1] += int(ok.size - ok.sum())
+            q = np.where(ok, f, 0.0).astype(np.int64)
+            return [(q >> 32).sum(), (q & 0xFFFFFFFF).sum()]
+
+        c = cnt.astype(np.float64)
+        out = [[0, 0]]
+        for mu, s2, nrm, lnc in fits:
+            k = len(mu)
+            zc = [
+                np.fmin(((x - mu[j]) * (x - mu[j])) / (2.0 * s2[j]), clamp)
+                for j in range(k)
+            ]
+            w = []
+            for j in range(k):
+                # exp_neg_arr clamps again; zc already is clamped
+                u = zc[j] * inv_2_16
+                t = 1.0 + u * (-1.0 + u * (0.5 + u * (-c3 + u * c4)))
+                for _ in range(16):
+                    t = t * t
+                w.append(nrm[j] * t)
+            tot = w[0]
+            for wj in w[1:]:
+                tot = tot + wj
+            rs = np.maximum(tot, floor_f)
+            if not lnl:
+                for j in range(k):
+                    g = w[j] / rs
+                    out += [snap(g * c, n_sc), snap((g * x) * c, sx_sc),
+                            snap(((g * x) * x) * c, sxx_sc)]
+                continue
+            big = w[0]
+            for wj in w[1:]:
+                big = np.maximum(big, wj)
+            bg = np.maximum(big, floor_f)
+            # the CASE chain, first match wins: component j when it is
+            # >= every LATER component, else the last one
+            lnb = lnc[k - 1] - zc[k - 1]
+            for j in reversed(range(k - 1)):
+                cond = w[j] >= w[j + 1]
+                for jj in range(j + 2, k):
+                    cond = cond & (w[j] >= w[jj])
+                lnb = np.where(cond, lnc[j] - zc[j], lnb)
+            lnb = np.where(tot <= floor_f, ln_floor, lnb)
+            sv = rs / bg
+            t = (sv - 1.0) / (sv + 1.0)
+            t2 = t * t
+            acc = atanh_c[-1]
+            for cf in reversed(atanh_c[:-1]):
+                acc = cf + t2 * acc
+            a = 2.0 * (t * (1.0 + t2 * acc))
+            out.append(snap((lnb + a) * c, lnl_sc))
+        return np.array(out, dtype=np.int64).reshape(-1, 2)
+
+    return e_step
+
+
+def _e_step_sums(hist: DataFrame, bins, fits, lnl: bool) -> list[int]:
+    """One E-step for every fit → exact integer sums (Python ints).
+    ``bins`` = the driver-held ``(x, cnt)`` arrays, or None to run the
+    kernel per Arrow batch on the workers (``mapInArrow``) and add the
+    per-batch partial sums here."""
+    e_step = _e_step_kernel()
+    if bins is not None:
+        parts = [(i, int(h), int(lo)) for i, (h, lo)
+                 in enumerate(e_step(bins[0], bins[1], fits, lnl))]
+    else:
+        def batches(it):
+            import pyarrow as pa
+
+            for b in it:
+                s = e_step(b.column(0).to_numpy(zero_copy_only=False),
+                           b.column(1).to_numpy(zero_copy_only=False),
+                           fits, lnl)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(range(len(s)), pa.int32()),
+                     pa.array(s[:, 0]), pa.array(s[:, 1])],
+                    names=["i", "hi", "lo"],
+                )
+
+        parts = hist.select("x", "cnt").mapInArrow(
+            batches, "i INT, hi BIGINT, lo BIGINT"
+        ).collect()
+    sums = [0] * (1 + (len(fits) if lnl
+                       else 3 * sum(len(f[0]) for f in fits)))
+    for i, h, lo in parts:
+        sums[i] += (h << 32) + lo
+    if sums[0]:
+        raise ValueError(
+            f"gmm: {sums[0]} per-bin E-step snaps overflow BIGINT"
+        )
+    if any(not -(1 << 63) <= v < 1 << 63 for v in sums):
+        raise ValueError("gmm: an E-step sum overflows BIGINT")
+    return sums[1:]
+
+
+def _kernel_params(P: dict[str, float], k: int, want_lnc: bool) -> tuple:
+    """One fit's ``(mu, s2, nrm, lnc)`` kernel argument from params
+    ``P``; ``lnc`` = ``xln(nrm)`` per component, as the oracle's scalar
+    ln chains compute it."""
+    J = range(1, k + 1)
+    lnc = tuple(X.xln(P[f"nrm{j}"]) for j in J) if want_lnc else ()
+    return (tuple(P[f"mu{j}"] for j in J), tuple(P[f"s2{j}"] for j in J),
+            tuple(P[f"nrm{j}"] for j in J), lnc)
+
+
+def _init_rows(spark: SparkSession, hist_view: str, ks) -> dict:
+    """ONE init statement for every K (the k-independent cum/tot CTEs
+    emitted once): ``{k: row}`` with the :func:`init_ctes` final
+    columns, ``mu0_j`` padded with NULLs beyond K."""
+    kmax = max(ks)
+    ctes: list[tuple[str, str]] = []
+    sels = []
+    for i, k in enumerate(ks):
+        ic, fin = init_ctes(hist_view, k, f"i{k}",
+                            shared=f"i{ks[0]}" if i else None)
+        ctes += ic
+        mus = ", ".join(
+            f"mu0_{j}" if j <= k else f"CAST(NULL AS DOUBLE) AS mu0_{j}"
+            for j in range(1, kmax + 1)
+        )
+        sels.append(f"SELECT {k} AS k, nd, n, s20, {mus} FROM {fin}")
+    rows = spark.sql(_with(ctes, " UNION ALL ".join(sels))).collect()
+    return {r["k"]: r for r in rows}
+
+
+def parity_em(spark: SparkSession, sf_dir: str, ks: tuple[int, ...],
+              iters: int, want_lnl: bool = False,
+              hist_view: str | None = None) -> dict:
+    """Run the bit-exact EM for every K in ``ks`` over ONE histogram:
+    the histogram scan and a single init statement run in Spark; each
+    E-step is :func:`_e_step_kernel` over all fits at once, and the
+    parameters fold driver-side with :func:`update_fold` (the op-for-op
+    mirror of the oracle's ``update_ctes``).  Returns
+    ``{k: (nd, P, lnl)}`` (``lnl`` None unless ``want_lnl``).
+
+    Placement by bin count, read from ``gmm.MAX_DRIVER_BINS`` at call
+    time: at most that many bins are collected once (``toArrow``) and
+    every E-step runs on the driver, so the Spark statement count does
+    not grow with ``iters``; a wider histogram stays on the workers
+    and each E-step is one ``mapInArrow`` job over it.  Both give the
+    same bits (integer sums).
 
     If ``hist_view`` is None the histogram view is created AND dropped
-    here (ADVICE r8: per-call view names must not accumulate in the
-    session catalog); pass an explicit view to share one histogram
+    here, which also releases its cache (ADVICE r8: per-call view
+    names must not accumulate in the session catalog); pass an explicit view to share one histogram
     across fits — then the caller owns the drop."""
     own_view = hist_view is None
     if own_view:
         hist_view = prepare_hist(spark, sf_dir)
     try:
-        ctes, fin = init_ctes(hist_view, k, "ini")
-        row = spark.sql(_with(ctes, f"SELECT * FROM {fin}")).collect()[0]
-        _require_nonempty(row["n"])
-        nd, P = init_fold(row, k)
+        init = _init_rows(spark, hist_view, ks)
+        _require_nonempty(init[ks[0]]["n"])
+        state = {k: init_fold(init[k], k) for k in ks}
+        hist = spark.table(hist_view)
+        head = hist.limit(gmm.MAX_DRIVER_BINS + 1).toArrow()
+        bins = None
+        if head.num_rows <= gmm.MAX_DRIVER_BINS:
+            bins = tuple(head.column(c).to_numpy(zero_copy_only=False)
+                         for c in ("x", "cnt"))
 
         for _ in range(iters):
-            pt = {key: X.dlit_exact(val) for key, val in P.items()}
-            ic, sfin = iter_ctes("spark", hist_view, pt, k, "it", "fit")
-            srow = spark.sql(
-                _with(ic, f"SELECT * FROM {sfin}")
-            ).collect()[0]
-            P = update_fold(srow, nd, k)
+            fits = [_kernel_params(state[k][1], k, False) for k in ks]
+            sums = iter(_e_step_sums(hist, bins, fits, False))
+            for k in ks:
+                nd, _ = state[k]
+                row = {f"{a}{j}u": next(sums) for j in range(1, k + 1)
+                       for a in ("n", "sx", "sxx")}
+                state[k] = (nd, update_fold(row, nd, k))
 
-        lnl = None
+        lnls = dict.fromkeys(ks)
         if want_lnl:
-            pt = {key: X.dlit_exact(val) for key, val in P.items()}
-            for j in range(1, k + 1):
-                pt[f"lnc{j}"] = X.dlit_exact(X.xln(P[f"nrm{j}"]))
-            ctes, fin = iter_ctes("spark", hist_view, pt, k, "ll", "lnl")
-            lrow = spark.sql(
-                _with(ctes, f"SELECT * FROM {fin}")
-            ).collect()[0]
-            lnl = float(lrow["lnlu"]) / _LNL_SCF
-        return nd, P, lnl
+            fits = [_kernel_params(state[k][1], k, True) for k in ks]
+            sums = _e_step_sums(hist, bins, fits, True)
+            lnls = {k: float(v) / _LNL_SCF for k, v in zip(ks, sums)}
+        return {k: state[k] + (lnls[k],) for k in ks}
     finally:
         if own_view:
             spark.catalog.dropTempView(hist_view)
-
-
-def parity_em_spark_multi(spark: SparkSession, sf_dir: str,
-                          ks: tuple[int, ...], iters: int,
-                          want_lnl: bool = False,
-                          hist_view: str | None = None):
-    """LOCKSTEP variant of :func:`parity_em_spark` for several
-    independent K values over ONE shared histogram: every iteration
-    issues a SINGLE statement computing all fits' sufficient-statistic
-    sums (per-fit CTE chains cross-joined at the end, columns prefixed
-    k{K}_), cutting the per-statement fixed cost (~0.35 s of
-    analyze+JIT+schedule) from ``len(ks)``× to 1× per iteration —
-    measured 5.1 → ~2.6 s for q_gmm_bic at sf0.1.  Arithmetic is
-    untouched: each fit's expressions are the same text as the
-    single-K path, so results are bit-identical to running the fits
-    separately (asserted by TestParityEMInvariants).  Returns
-    ``{k: (nd, P, lnl)}``.  View ownership as in
-    :func:`parity_em_spark`: a self-created histogram view is dropped
-    on exit."""
-    own_view = hist_view is None
-    if own_view:
-        hist_view = prepare_hist(spark, sf_dir)
-    try:
-        return _parity_em_multi_body(spark, hist_view, ks, iters, want_lnl)
-    finally:
-        if own_view:
-            spark.catalog.dropTempView(hist_view)
-
-
-def _parity_em_multi_body(spark, hist_view, ks, iters, want_lnl):
-    # one statement for ALL inits (cum/tot shared across k)
-    ctes: list[tuple[str, str]] = []
-    sels = []
-    for i, k in enumerate(ks):
-        shared = f"i{ks[0]}" if i > 0 else None
-        ic, fin = init_ctes(hist_view, k, f"i{k}", shared=shared)
-        ctes += ic
-        sels.append((k, fin))
-    final = " CROSS JOIN ".join(
-        f"(SELECT {', '.join(f'{c} AS k{k}_{c}' for c in ['nd', 'n'] + [f'mu0_{j}' for j in range(1, k + 1)] + ['s20'])}"
-        f" FROM {fin}) t{k}"
-        for k, fin in sels
-    )
-    row = spark.sql(_with(ctes, f"SELECT * FROM {final}")).collect()[0]
-    _require_nonempty(row[f"k{ks[0]}_n"])
-
-    class _View:
-        """Per-k window over the prefixed combined row."""
-
-        def __init__(self, row, k):
-            self._row, self._k = row, k
-
-        def __getitem__(self, name):
-            return self._row[f"k{self._k}_{name}"]
-
-    state = {}
-    for k in ks:
-        nd, P = init_fold(_View(row, k), k)
-        state[k] = (nd, P)
-
-    for _ in range(iters):
-        ctes = []
-        parts = []
-        for k in ks:
-            _, P = state[k]
-            pt = {key: X.dlit_exact(val) for key, val in P.items()}
-            ic, fin = iter_ctes("spark", hist_view, pt, k, f"m{k}", "fit")
-            ctes += ic
-            cols = [f"{a}{j}u" for j in range(1, k + 1)
-                    for a in ("n", "sx", "sxx")]
-            parts.append(
-                f"(SELECT {', '.join(f'{c} AS k{k}_{c}' for c in cols)}"
-                f" FROM {fin}) t{k}"
-            )
-        q = _with(ctes, "SELECT * FROM " + " CROSS JOIN ".join(parts))
-        row = spark.sql(q).collect()[0]
-        for k in ks:
-            nd, _ = state[k]
-            state[k] = (nd, update_fold(_View(row, k), nd, k))
-
-    out = {}
-    if want_lnl:
-        ctes = []
-        parts = []
-        for k in ks:
-            _, P = state[k]
-            pt = {key: X.dlit_exact(val) for key, val in P.items()}
-            for j in range(1, k + 1):
-                pt[f"lnc{j}"] = X.dlit_exact(X.xln(P[f"nrm{j}"]))
-            ic, fin = iter_ctes("spark", hist_view, pt, k, f"l{k}", "lnl")
-            ctes += ic
-            parts.append(
-                f"(SELECT lnlu AS k{k}_lnlu FROM {fin}) t{k}"
-            )
-        q = _with(ctes, "SELECT * FROM " + " CROSS JOIN ".join(parts))
-        row = spark.sql(q).collect()[0]
-        for k in ks:
-            nd, P = state[k]
-            out[k] = (nd, P, float(row[f"k{k}_lnlu"]) / _LNL_SCF)
-    else:
-        for k in ks:
-            nd, P = state[k]
-            out[k] = (nd, P, None)
-    return out
 
 
 # ---- DuckDB oracle builders ---------------------------------------------
@@ -625,7 +687,7 @@ def _oracle_em_ctes(k: int, iters: int, tag: str, want_lnl: bool
              [f"{a}{j}" for j in range(1, k + 1)
               for a in ("mu", "s2", "nrm")]}
         src = f"{tag}_hist CROSS JOIN {pcur}"
-        bctes, bfin = iter_ctes("duckdb", src, P, k, f"{tag}_x{i}", "fit")
+        bctes, bfin = iter_ctes(src, P, k, f"{tag}_x{i}", "fit")
         ctes += bctes
         uctes, pcur = update_ctes(bfin, f"{tag}_ini_tot", k, f"{tag}_x{i}")
         ctes += uctes
@@ -660,7 +722,7 @@ def _oracle_em_ctes(k: int, iters: int, tag: str, want_lnl: bool
         for j in range(1, k + 1):
             P[f"lnc{j}"] = f"{tag}_lc{j}_v"
         src = f"{tag}_hist CROSS JOIN {prev}"
-        lctes, lnl_cte = iter_ctes("duckdb", src, P, k, f"{tag}_ll", "lnl")
+        lctes, lnl_cte = iter_ctes(src, P, k, f"{tag}_ll", "lnl")
         ctes += lctes
     return ctes, pcur, lnl_cte
 
@@ -726,9 +788,9 @@ def q_gmm_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic EM fit on events.value → K-row parameter table
     (K=3, fixed 15 iterations) — now hash-checked against a DuckDB
     replay via the bit-exact parity EM (module docstring); through r5
-    this was rows-only.  One histogram scan + 15 histogram-sized
-    aggregation jobs; the driver holds 9 floats of state."""
-    _, P, _ = parity_em_spark(spark, sf_dir, K_FIT, ITERS_FIT)
+    this was rows-only.  One histogram scan and one init statement in
+    Spark; the 15 E-steps run in numpy over the histogram."""
+    _, P, _ = parity_em(spark, sf_dir, (K_FIT,), ITERS_FIT)[K_FIT]
     rows = [
         (j - 1, _round6(P[f"phi{j}"]), _round6(P[f"mu{j}"]),
          _round6(P[f"s2{j}"]))
@@ -752,9 +814,7 @@ def q_gmm_bic(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-NULL values the likelihood actually sees — not the raw row
     count."""
     rows = []
-    fits = parity_em_spark_multi(
-        spark, sf_dir, (2, 3, 4), ITERS_BIC, want_lnl=True
-    )
+    fits = parity_em(spark, sf_dir, (2, 3, 4), ITERS_BIC, want_lnl=True)
     for k in (2, 3, 4):
         nd, _, lnl = fits[k]
         pd_ = float(3 * k - 1)

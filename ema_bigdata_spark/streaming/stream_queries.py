@@ -78,9 +78,8 @@ def _state_partitions(spark, n: int | None = None):
     # DOES emit on watermark advance (append-mode windowed aggregation)
     # or that needs idle-time state eviction should leave the default
     # on — which is why this rides the per-query context, not the
-    # session builder.  Env-overridable like the partition count.
-    nodata = os.environ.get("SPARK_GRAFT_STREAM_NODATA_BATCHES", "false")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", nodata)
+    # session builder.
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     try:
         yield
     finally:

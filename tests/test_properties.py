@@ -306,9 +306,12 @@ class TestGMM:
         df = spark.createDataFrame([(float(v),) for v in xs], "value DOUBLE")
         monkeypatch.setattr(gmm_mod, "MAX_DRIVER_BINS", 4)
 
-        monkeypatch.setenv("SPARK_GRAFT_EM_DECIMAL", "1")
+        # every bin count is >= 0, so a zero cutover forces the
+        # decimal path
+        limb_max = gmm_mod._LIMB_MAX_BINS
+        monkeypatch.setattr(gmm_mod, "_LIMB_MAX_BINS", 0)
         dec = gmm_mod.gmm_fit(df, "value", k=3, tol=0.0, max_iter=5)
-        monkeypatch.delenv("SPARK_GRAFT_EM_DECIMAL")
+        monkeypatch.setattr(gmm_mod, "_LIMB_MAX_BINS", limb_max)
         limb = gmm_mod.gmm_fit(df, "value", k=3, tol=0.0, max_iter=5)
 
         assert dec.weights == limb.weights
@@ -540,6 +543,22 @@ def test_connected_components_correct(spark, monkeypatch):
     }
     assert got_driver == want
     assert got_dist == want
+
+
+@pytest.mark.parametrize("max_iter", [0, -1])
+def test_connected_components_refuses_no_rounds(spark, monkeypatch,
+                                                max_iter):
+    """``max_iter < 1`` asks for zero propagation rounds — identity
+    labels, which are no clustering at all.  Both paths refuse it at
+    entry, before any job runs."""
+    from ema_bigdata_spark.operators import dedup as dd
+
+    pairs = spark.createDataFrame([(1, 2)], "doc_a BIGINT, doc_b BIGINT")
+    with pytest.raises(ValueError, match="max_iter"):
+        dd.connected_components(pairs, max_iter=max_iter)
+    monkeypatch.setattr(dd, "_CC_DRIVER_MAX", 0)
+    with pytest.raises(ValueError, match="max_iter"):
+        dd.connected_components(pairs, max_iter=max_iter)
 
 
 def test_ngram_jaccard_hot_shingle_cap_engages(spark):
@@ -3969,15 +3988,18 @@ class TestJsonBoundary:
 class TestParityEMInvariants:
     """r6: invariants of the oracled parity EM beyond the DuckDB hash."""
 
-    def test_partitioning_independence(self, spark, sf_dir):
+    def test_partitioning_independence(self, spark, sf_dir,
+                                       monkeypatch):
         """The snapped-integer sufficient-statistic sums make every
         iteration order-free, so the fit must be bit-identical under
         any histogram partitioning (the same invariant gmm.py's
-        DECIMAL path guarantees for the numpy engine)."""
+        DECIMAL path guarantees for the numpy engine) — with the
+        E-steps on the driver and per Arrow batch on the workers."""
+        from ema_bigdata_spark import gmm
         from ema_bigdata_spark import gmm_parity as G
         from ema_bigdata_spark.sources.tables import load_table
 
-        base = G.parity_em_spark(spark, sf_dir, 3, 4)
+        base = G.parity_em(spark, sf_dir, (3,), 4)[3]
         ev = load_table(spark, sf_dir, "events")
         ev.createOrReplaceTempView("v_gmm_events")
         for parts in (1, 13):
@@ -3987,13 +4009,15 @@ class TestParityEMInvariants:
                 .localCheckpoint()
             )
             hist.createOrReplaceTempView("v_gmm_hist_t")
-            got = G.parity_em_spark(
-                spark, sf_dir, 3, 4, hist_view="v_gmm_hist_t"
-            )
-            assert got[0] == base[0]
-            # compare by IEEE bits: Python == treats -0.0 == +0.0,
-            # exactly the class the driver hash distinguishes
-            assert _packed(got[1]) == _packed(base[1]), parts
+            for cut in (gmm.MAX_DRIVER_BINS, 4):
+                monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", cut)
+                got = G.parity_em(
+                    spark, sf_dir, (3,), 4, hist_view="v_gmm_hist_t"
+                )[3]
+                assert got[0] == base[0]
+                # compare by IEEE bits: Python == treats -0.0 == +0.0,
+                # exactly the class the driver hash distinguishes
+                assert _packed(got[1]) == _packed(base[1]), (parts, cut)
 
     def test_randomized_xmath_cross_engine(self, spark, duck):
         """Seeded random doubles through the shared exp/ln texts,
@@ -4129,22 +4153,140 @@ class TestParityEMInvariants:
         assert after == before, sorted(after - before)
 
     def test_lockstep_multi_equals_single_k(self, spark, sf_dir):
-        """The merged per-iteration statement (all K fits in one SQL)
-        must produce BIT-identical parameters and lnL to the single-K
-        path — the merge is a scheduling change, not a math change."""
+        """Several K fitted in one call (one init statement, every
+        E-step over all fits at once) must produce BIT-identical
+        parameters and lnL to fitting each K alone — batching the fits
+        is a scheduling change, not a math change."""
         from ema_bigdata_spark import gmm_parity as G
 
         hv = G.prepare_hist(spark, sf_dir)
-        multi = G.parity_em_spark_multi(
-            spark, sf_dir, (2, 3), 3, want_lnl=True, hist_view=hv
-        )
-        for k in (2, 3):
-            nd, P, lnl = G.parity_em_spark(
-                spark, sf_dir, k, 3, want_lnl=True, hist_view=hv
+        try:
+            multi = G.parity_em(
+                spark, sf_dir, (2, 3), 3, want_lnl=True, hist_view=hv
             )
-            assert multi[k][0] == nd
-            assert _packed(multi[k][1]) == _packed(P), k
-            assert _packed({"l": multi[k][2]}) == _packed({"l": lnl}), k
+            for k in (2, 3):
+                nd, P, lnl = G.parity_em(
+                    spark, sf_dir, (k,), 3, want_lnl=True, hist_view=hv
+                )[k]
+                assert multi[k][0] == nd
+                assert _packed(multi[k][1]) == _packed(P), k
+                assert _packed({"l": multi[k][2]}) == _packed(
+                    {"l": lnl}
+                ), k
+        finally:
+            spark.catalog.dropTempView(hv)
+
+    def test_e_step_kernel_matches_scalar_mirrors(self):
+        """The numpy E-step against a per-bin Python loop over the
+        scalar mirrors (``xexp_neg``, ``py_atanh_ln``) and exact int
+        sums: equal integers in both modes, for bins near the means,
+        in the tails, and far enough out that every density underflows
+        to the floor (the lnL floor branch)."""
+        import math
+        import random
+
+        import numpy as np
+
+        from ema_bigdata_spark import gmm_parity as G
+        from ema_bigdata_spark.functions import xmath as X
+
+        rng = random.Random(7)
+        xs = [rng.uniform(-20.0, 30.0) for _ in range(300)]
+        xs += [0.0, -0.0, 2e3, -1e6, 1e6]
+        cnts = [rng.randint(1, 10**6) for _ in xs]
+        P = {"mu1": -3.0, "mu2": 4.5, "mu3": 12.0, "s21": 2.0,
+             "s22": 0.7, "s23": 5.0}
+        for j in (1, 2, 3):
+            P[f"nrm{j}"] = max((1.0 / 3.0) / math.sqrt(
+                X.TWO_PI * P[f"s2{j}"]), G._FLOOR_F)
+
+        def snap(v, scale):
+            return math.floor((v * scale) + 0.5)
+
+        want_fit, want_lnl = [0] * 9, 0
+        for x, n in zip(xs, cnts):
+            c = float(n)
+            zc = [min(((x - P[f"mu{j}"]) * (x - P[f"mu{j}"]))
+                      / (2.0 * P[f"s2{j}"]), X.EXP_CLAMP) for j in (1, 2, 3)]
+            w = [P[f"nrm{j}"] * X.xexp_neg(zc[j - 1]) for j in (1, 2, 3)]
+            tot = (w[0] + w[1]) + w[2]
+            rs = max(tot, G._FLOOR_F)
+            for j in range(3):
+                g = w[j] / rs
+                want_fit[3 * j] += snap(g * c, G._N_SCF)
+                want_fit[3 * j + 1] += snap((g * x) * c, G._SX_SCF)
+                want_fit[3 * j + 2] += snap(((g * x) * x) * c, G._SXX_SCF)
+            lnc = [X.xln(P[f"nrm{j}"]) for j in (1, 2, 3)]
+            if tot <= G._FLOOR_F:
+                lnb = math.log(1e-300)
+            elif w[0] >= w[1] and w[0] >= w[2]:
+                lnb = lnc[0] - zc[0]
+            elif w[1] >= w[2]:
+                lnb = lnc[1] - zc[1]
+            else:
+                lnb = lnc[2] - zc[2]
+            sv = rs / max(max(w), G._FLOOR_F)
+            want_lnl += snap((lnb + X.py_atanh_ln(sv)) * c, G._LNL_SCF)
+
+        e_step = G._e_step_kernel()
+        x, cnt = np.array(xs), np.array(cnts, dtype=np.int64)
+        for lnl, want in ((False, want_fit), (True, [want_lnl])):
+            out = e_step(x, cnt, [G._kernel_params(P, 3, lnl)], lnl)
+            got = [(int(h) << 32) + int(lo) for h, lo in out]
+            assert got == [0] + want, lnl
+
+    def test_worker_estep_matches_driver_and_oracle(
+        self, spark, duck, sf_dir, monkeypatch
+    ):
+        """With ``gmm.MAX_DRIVER_BINS`` lowered to 4, every E-step of
+        the registered EM queries runs per Arrow batch through
+        ``mapInArrow``; their rows must be bit-identical to the
+        driver placement's and to the DuckDB oracle's."""
+        from ema_bigdata_spark import gmm
+        from tests.oracle import compare_query, rowset
+
+        def rows(name):
+            sdf = registry.QUERIES[name](spark, sf_dir)
+            return rowset(sdf.columns, [tuple(r) for r in sdf.collect()])
+
+        registry.load_all()
+        for name in ("gmm_fit", "q_gmm_bic"):
+            driver = rows(name)
+            monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", 4)
+            assert rows(name) == driver, name
+            compare_query(spark, duck, sf_dir, name)
+            monkeypatch.undo()
+
+    @pytest.mark.parametrize("cnt,overflows", [
+        (3 * 10**10, True), (10**10, False),
+    ])
+    def test_snap_overflow_raises(self, spark, monkeypatch, cnt,
+                                  overflows):
+        """A per-bin snap outside int64 refuses the fit, in both
+        placements: one bin (x=1.0, cnt=3·10^10) puts each component's
+        n-snap at ~1e19 > 2^63, which Spark's ``floor`` would saturate
+        to 2^63−1 (weights 0.3074 summing to 0.9223) and the oracle's
+        BIGINT cast refuses.  At cnt=10^10 the same bin fits, and the
+        three identical components split it evenly."""
+        from ema_bigdata_spark import gmm
+        from ema_bigdata_spark import gmm_parity as G
+
+        spark.createDataFrame(
+            [(1.0, cnt)], "x DOUBLE, cnt BIGINT"
+        ).createOrReplaceTempView("v_gmm_one_bin")
+        for cut in (gmm.MAX_DRIVER_BINS, 0):
+            monkeypatch.setattr(gmm, "MAX_DRIVER_BINS", cut)
+            if overflows:
+                with pytest.raises(ValueError, match="overflow BIGINT"):
+                    G.parity_em(spark, None, (3,), 1,
+                                hist_view="v_gmm_one_bin")
+                continue
+            _, P, _ = G.parity_em(spark, None, (3,), 1,
+                                  hist_view="v_gmm_one_bin")[3]
+            weights = [P[f"phi{j}"] for j in (1, 2, 3)]
+            assert [G._round6(w) for w in weights] == [0.333333] * 3
+            assert weights == [pytest.approx(1 / 3, rel=1e-15)] * 3
+        spark.catalog.dropTempView("v_gmm_one_bin")
 
 
 def test_covariance_arrow_path_bit_identical(spark, sf_dir):
