@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ema_bigdata_spark.functions.textfold import fold_lower, lev_bytes
 from ema_bigdata_spark.registry import query
+from ema_bigdata_spark.session import pinned_confs
 from ema_bigdata_spark.sources.tables import load_table, spread
 
 # MinHash parameters: 16 hashes = 4 bands × 4 rows (LSH threshold
@@ -855,40 +856,62 @@ def connected_components(
     union-find answers in one collect (measured 4× faster than the
     4-round distributed loop's job overhead).  Above it, distributed
     min-label propagation with POINTER DOUBLING (r8): each round every
-    node takes the minimum label among itself and its neighbors (the
-    self-inclusion rides a per-node SELF-LOOP in the edge cache — r13,
-    guide §2.4 — so the propagate is one join + one aggregate, not a
-    third per-round |V| shuffle join; round 1's seed labels are the
-    identity, so its propagate is a plain ``min(dst) GROUP BY src``
-    with no join at all), then jumps once through the label table
-    (label ← label(label)), so the distance a min label covers roughly
-    doubles per round — O(log diameter) rounds instead of O(diameter)
-    (dup clusters are near-cliques, so 2-3 rounds either way; deep
-    chains are where the doubling earns; a SECOND jump per round was
-    measured r13 and LOSES ~2.7× — the extra |V| shuffle join per
-    round costs more than the rounds it could save at these
-    diameters).  The edge cache is hash-partitioned by ``dst`` before
-    materialization (width = the session's shuffle-partition setting),
-    so every round's propagate join reuses the cached layout instead
-    of re-exchanging the full edge table — only the label side
-    shuffles per round.  Convergence is detected by an exact-sum
-    fixpoint: per-node labels are monotonically non-increasing
-    (``least`` of self and neighbors), so two consecutive rounds with
-    equal DECIMAL(38,0) label sums mean NO node changed — one
-    map-side-combined aggregate per round instead of the r5 form's
-    labels⋈labels change probe.  Measured on the 612 k-node
-    diameter-5 chain fixture (warm min-of-3, interleaved): r5 form
-    11.31 s / 6 rounds → sum-fixpoint 8.83 s / 6 rounds → +doubling
-    7.91 s / 3 rounds → r13 self-loop + round-1 + pre-partitioned
-    cache 5.3 s / 3 rounds.  Every 3rd round the label frame is
-    checkpointed — caching alone truncates COMPUTE but not the PLAN,
-    so an iterative self-join otherwise grows the lineage (and
-    Catalyst re-analysis cost) per round and recompute cascades on
-    cache eviction.  Locally that's ``localCheckpoint``; at true
-    cluster scale point ``spark.sparkContext.setCheckpointDir`` at
-    durable storage and swap in reliable ``checkpoint()``.  Both
-    paths return identical labels.  ``max_iter < 1`` raises
-    ``ValueError``: no propagation round is no clustering.
+    node takes the minimum label among itself and its neighbors, then
+    jumps once through the label table (label ← label(label)), so the
+    distance a min label covers roughly doubles per round —
+    O(log diameter) rounds instead of O(diameter) (dup clusters are
+    near-cliques, so 2-3 rounds either way; deep chains are where the
+    doubling earns; a SECOND jump per round was measured r13 and LOSES
+    ~2.7× — the extra |V| shuffle join per round costs more than the
+    rounds it could save at these diameters).
+
+    The distributed shape:
+
+    - ONE-SCAN SYMMETRIZATION.  Each pair emits both arcs (a, b) and
+      (b, a) from a single read of the input, hash-partitioned by
+      ``dst`` before it is cached, so every round's propagate join
+      reuses the cached layout and only the |V|-sized label side
+      shuffles per round.  No self-loop rows and no node ``distinct``:
+      every node already appears as a ``src``.
+    - OWN LABEL THROUGH THE UNION.  Round 1's seed labels are the
+      identity, so its propagate is ``least(src, min(dst)) GROUP BY
+      src`` with no join at all.  Later rounds ``unionByName`` the
+      label frame (each node's own label) into the joined neighbor
+      labels, so the propagate is one join + one aggregate — no
+      labels⋈neighbor_min join per round.
+    - LOOP WIDTH.  The arc cache and every round run with
+      ``spark.sql.shuffle.partitions`` pinned to
+      ``min(shuffle partitions, defaultParallelism)`` (restored on
+      exit, also on error), and the union is coalesced to that width,
+      so each stage is one task wave.  The width must be chosen up
+      front: Spark does not let AQE coalesce a cached plan's output
+      partitions (``canChangeCachedPlanOutputPartitioning`` is false
+      by default), so a loop cached at 32 partitions on 4 slots runs
+      8 waves of near-empty tasks in every stage.  Sessions with no
+      more shuffle partitions than task slots are unchanged.
+
+    Convergence is detected by an exact-sum fixpoint: per-node labels
+    are monotonically non-increasing (``least`` of self and
+    neighbors), so two consecutive rounds with equal DECIMAL(38,0)
+    label sums mean NO node changed — one map-side-combined aggregate
+    per round instead of the r5 form's labels⋈labels change probe.
+    Every 3rd round the label frame is checkpointed — caching alone
+    truncates COMPUTE but not the PLAN, so an iterative self-join
+    otherwise grows the lineage (and Catalyst re-analysis cost) per
+    round and recompute cascades on cache eviction.  Locally that's
+    ``localCheckpoint``; at true cluster scale point
+    ``spark.sparkContext.setCheckpointDir`` at durable storage and
+    swap in reliable ``checkpoint()``.
+
+    Measured at local[4] with 32 shuffle partitions, call + parquet
+    write, warm: on the 612 k-node diameter-5 chain fixture
+    (``chain_edges()``, 510 k edges) the r13 self-loop form took
+    13.9-15.5 s and this shape 9.5-12.4 s; on a 76.5 k-node fixture
+    with 51 k edges, 3.5-4.0 s → 1.7-2.8 s.  (Earlier forms on the
+    612 k fixture, warm min-of-3: r5 11.31 s / 6 rounds → sum-fixpoint
+    8.83 s / 6 rounds → +doubling 7.91 s / 3 rounds, on a different
+    host.)  Both paths return identical labels.  ``max_iter < 1``
+    raises ``ValueError``: no propagation round is no clustering.
     """
     if max_iter < 1:
         raise ValueError(
@@ -905,51 +928,62 @@ def connected_components(
     # §4.1): at the 500 k-row cutover the Row path measured 2.0 s of
     # pure serialization vs 0.06 s via toArrow — the probe is the
     # distributed path's entry fee, so it must be cheap.
+    spark = pairs.sparkSession
     probe = edges.limit(_CC_DRIVER_MAX + 1).toArrow()
     if probe.num_rows <= _CC_DRIVER_MAX:
-        return _components_driver(pairs.sparkSession, probe)
-    # r13 shape changes (guide §2.4 — remove shuffles outright):
-    # (1) SELF-LOOPS: the symmetrized edge set is augmented with one
-    #     (x, x) loop per node, so the per-round propagation min
-    #     already includes the node's own label — the old
-    #     labels⋈neighbor_min LEFT JOIN (a full |V| shuffle join per
-    #     round) disappears; `min(self ∪ neighbors)` ≡
-    #     `least(own, min(neighbors))` exactly, and every node has a
-    #     self-loop so no row can drop out.
-    # (2) ROUND-1 SPECIALIZATION: the seed labels are the identity, so
-    #     round 1's propagate is `min(dst) GROUP BY src` straight off
-    #     the edge cache — no join at all.
-    # (3) PRE-PARTITIONED EDGE CACHE: the union's output partitioning
-    #     is unknown, so every round's propagate re-exchanged the full
-    #     edge table by dst; hash-repartitioning ONCE before the cache
-    #     (the cached partitioning is preserved — localCheckpoint's is
-    #     not, probed on this build) leaves only the |V|-sized label
-    #     side to shuffle per round.  Width follows the session's
-    #     shuffle-partition setting, not a local constant.
-    # Measured together on the 510 k-edge fixture: 7.0 → 5.3 s warm
-    # min-of-3, labels identical (analytic ground truth + oracle).
-    npart = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
+        return _components_driver(spark, probe)
+    # LOOP WIDTH (docstring): min(shuffle partitions, task slots),
+    # chosen before anything is cached — AQE cannot shrink a cached
+    # plan's partitions afterwards — and pinned for the arc cache
+    # build and every round, so all of the loop's caches share it.
+    npart = min(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
     )
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    nodes_df = sym.select("src").distinct()
-    edges = (
-        sym.union(nodes_df.select("src", F.col("src").alias("dst")))
-        .repartition(npart, "dst")
-        .cache()
-    )
+    with pinned_confs(spark, {"spark.sql.shuffle.partitions": str(npart)}):
+        # ONE-SCAN symmetrization (docstring): explode both arcs of
+        # each pair, then hash-partition by dst ONCE before the cache
+        # (the cached partitioning is preserved — localCheckpoint's is
+        # not, probed on this build)
+        arcs = (
+            edges.select(F.explode(F.array(
+                F.struct("src", "dst"),
+                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
+            )).alias("arc"))
+            .select("arc.src", "arc.dst")
+            .repartition(npart, "dst")
+            .cache()
+        )
+        try:
+            return _propagate_labels(arcs, npart, max_iter)
+        finally:
+            arcs.unpersist()
+
+
+def _propagate_labels(
+    arcs: DataFrame, npart: int, max_iter: int
+) -> DataFrame:
+    """The distributed rounds of ``connected_components`` over the
+    cached symmetric arc table (src, dst)."""
     labels = None
     prev_sum = None
     for it in range(max_iter):
         if labels is None:
-            new_labels = edges.groupBy("src").agg(
-                F.min("dst").alias("cluster_id")
+            # seed labels are the identity: the own label is src itself
+            new_labels = arcs.groupBy("src").agg(
+                F.least(F.col("src"), F.min("dst")).alias("cluster_id")
             ).withColumnRenamed("src", "doc_id")
         else:
+            # the own label enters the min through the union; the
+            # coalesce keeps the union's map stage at npart tasks
+            # (a union's partitions are its children's, summed)
             new_labels = (
-                edges.join(labels, edges.dst == labels.doc_id)
+                arcs.join(labels, arcs.dst == labels.doc_id)
+                .select("src", "cluster_id")
+                .unionByName(labels.select(
+                    F.col("doc_id").alias("src"), "cluster_id"
+                ))
+                .coalesce(npart)
                 .groupBy("src")
                 .agg(F.min("cluster_id").alias("cluster_id"))
                 .withColumnRenamed("src", "doc_id")
@@ -991,7 +1025,6 @@ def connected_components(
         if prev_sum is not None and new_sum == prev_sum:
             break
         prev_sum = new_sum
-    edges.unpersist()
     return labels
 
 

@@ -9,8 +9,10 @@ without plan changes.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
+from pyspark.errors import AnalysisException, IllegalArgumentException
 from pyspark.sql import SparkSession
 
 # Confs that are safe (and desirable) at any scale.  All of these are
@@ -54,13 +56,28 @@ BUILDER_CONFS: dict[str, str] = {
 }
 
 
+def _set_if_modifiable(spark: SparkSession, key: str, value: str) -> None:
+    """``spark.conf.set`` that skips a conf the session refuses as
+    non-modifiable — a core conf or a static SQL conf, raised on Spark
+    4.1 as ``AnalysisException`` with condition ``CANNOT_MODIFY_CONFIG``
+    or ``CANNOT_MODIFY_STATIC_CONFIG``.  Every other error raises."""
+    try:
+        spark.conf.set(key, value)
+    except AnalysisException as e:
+        if e.getCondition() not in (
+            "CANNOT_MODIFY_CONFIG", "CANNOT_MODIFY_STATIC_CONFIG"
+        ):
+            raise
+
+
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an existing session (driver-owned)."""
+    """Apply runtime-settable confs to an existing session (driver-owned).
+
+    A conf the session refuses as non-modifiable is skipped (the loader
+    re-asserts what it needs); any other error — a malformed value, a
+    dead session — raises."""
     for k, v in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable on this build; loader re-asserts what it needs
+        _set_if_modifiable(spark, k, v)
     # AQE sort-merge→shuffled-hash rewrite (guide §3.1; Spark default 0
     # = off): when every post-shuffle partition of the build side is
     # under the threshold, the sort of both sides is skipped.  The
@@ -74,20 +91,40 @@ def tune(spark: SparkSession) -> SparkSession:
     # q_sql_tpch_q2 flat (+2%, noise); the sf0.1 A/B was within noise
     # (r12), the sf1 one is not.  Env-overridable for cluster sizing.
     shj = os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD")
+    key = "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
     if shj is None:
-        try:
-            shj = spark.conf.get(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-            )
-        except Exception:
-            shj = str(64 * 1024 * 1024)
+        _set_if_modifiable(spark, key, spark.conf.get(
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+        ))
+        return spark
     try:
-        spark.conf.set(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", shj
-        )
-    except Exception:
-        pass
+        _set_if_modifiable(spark, key, shj)
+    except IllegalArgumentException as e:
+        raise ValueError(
+            f"SPARK_GRAFT_SHJ_THRESHOLD={shj!r} is not a byte size "
+            f"accepted by {key}"
+        ) from e
     return spark
+
+
+@contextlib.contextmanager
+def pinned_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set runtime confs for the duration of a block, then restore each
+    key's previous value (unset again if it was unset), also when the
+    block raises.  The one conf-pin mechanism of the package: the
+    streaming drains pin their state width with it and connected
+    components pins its loop's shuffle width."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_spark(

@@ -30,6 +30,7 @@ import uuid
 from pyspark.sql import functions as F
 
 from ema_bigdata_spark.registry import query
+from ema_bigdata_spark.session import pinned_confs
 from ema_bigdata_spark.sources.tables import (
     event_epoch_us,
     event_instant,
@@ -60,11 +61,6 @@ def _state_partitions(spark, n: int | None = None):
     to sustained keys/sec once — it cannot change after the
     checkpoint is created)."""
     n = n or int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4"))
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
     # r13 (guide §1 — measured): after the data batch drains, Spark
     # schedules one extra NO-DATA micro-batch purely to advance the
     # watermark and evict state; it emits nothing for every query in
@@ -79,14 +75,11 @@ def _state_partitions(spark, n: int | None = None):
     # or that needs idle-time state eviction should leave the default
     # on — which is why this rides the per-query context, not the
     # session builder.
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    with pinned_confs(spark, {
+        "spark.sql.shuffle.partitions": str(n),
+        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+    }):
         yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
 
 def _configure_kafka(reader, table: str):
     """Apply the Kafka source configuration to a ``DataStreamReader``

@@ -711,6 +711,116 @@ def test_connected_components_distributed_past_real_gate(spark):
     assert all(find(n) == n - n % 6 for n in parent)
 
 
+#: Graphs on which the distributed label propagation must give the
+#: driver union-find's labels exactly.
+_CC_AWKWARD = {
+    "duplicate_pairs": [(1, 2), (1, 2), (2, 1), (2, 3), (2, 3), (5, 6),
+                        (6, 5), (5, 6)],
+    "self_pairs": [(1, 1), (2, 2), (2, 3), (7, 7), (7, 8), (9, 9)],
+    "reversed_orientation": [(4, 3), (3, 2), (2, 1), (9, 8), (20, 10),
+                             (15, 10)],
+    # diameter 39: the doubling loop needs 5 rounds plus the fixpoint
+    # round, so it passes the round-3 localCheckpoint branch
+    "long_chain": [(i, i + 1) for i in range(100, 139)],
+    # node 7 gets label 1 through the jump in round 2 while its only
+    # neighbor, 6, holds 3; without its own label in round 3's min it
+    # falls back to 3, the label sum repeats and the loop stops early
+    "own_label_needed": [(8, 6), (4, 6), (7, 6), (1, 5), (8, 3), (5, 4)],
+}
+
+
+@pytest.mark.parametrize("graph", sorted(_CC_AWKWARD))
+def test_connected_components_distributed_matches_driver(
+    spark, monkeypatch, graph
+):
+    """The distributed path (forced by zeroing ``_CC_DRIVER_MAX``)
+    returns exactly the driver union-find's rows on graphs that stress
+    the symmetrization and the own-label union: repeated pairs, self
+    pairs ``(a, a)`` (including an isolated one), pairs whose
+    ``doc_a > doc_b``, a chain deep enough to need a checkpointed
+    round, and a graph that is labelled wrongly if a node's own label
+    is left out of the propagate's min.  For the chain, two rounds must NOT suffice, which proves
+    the full run went past round 3."""
+    from ema_bigdata_spark.operators import dedup as dd
+
+    pairs = spark.createDataFrame(
+        _CC_AWKWARD[graph], "doc_a BIGINT, doc_b BIGINT"
+    )
+
+    def rows(**kw):
+        return sorted(
+            (r.doc_id, r.cluster_id)
+            for r in dd.connected_components(pairs, **kw).collect()
+        )
+
+    want = rows()
+    monkeypatch.setattr(dd, "_CC_DRIVER_MAX", 0)
+    assert rows() == want
+    if graph == "long_chain":
+        assert want == [(n, 100) for n in range(100, 140)]
+        assert rows(max_iter=2) != want
+
+
+def _cc_chain(spark, n: int, bad_row: int | None = None):
+    """A 2-partition chain 0-1-…-(n-1); ``bad_row`` makes that row's
+    ``doc_b`` a ``raise_error`` the first-row probe never reaches."""
+    doc_b = F.col("id") + 1
+    if bad_row is not None:
+        doc_b = F.when(
+            F.col("id") == bad_row, F.raise_error(F.lit("cc-bad-row"))
+        ).otherwise(doc_b)
+    return spark.range(0, n, 1, 2).select(
+        F.col("id").alias("doc_a"), doc_b.alias("doc_b")
+    )
+
+
+def test_connected_components_loop_width_and_conf_restore(
+    spark, monkeypatch
+):
+    """The distributed loop runs at min(shuffle partitions, task
+    slots) — 4 in this local[4] / 8-partition session — and puts the
+    session's shuffle width back afterwards.  The input has 2
+    partitions, so every stage the call runs (input scan included)
+    must fit in one task wave; the returned labels carry the loop
+    width.  A failure inside the loop restores the width too."""
+    from ema_bigdata_spark.operators import dedup as dd
+
+    sc = spark.sparkContext
+    slots = sc.defaultParallelism
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    assert int(prev) > slots  # else the width cap is not exercised
+    monkeypatch.setattr(dd, "_CC_DRIVER_MAX", 1)
+
+    group = "cc-loop-width"
+    sc.setJobGroup(group, "connected components loop width")
+    try:
+        labels = dd.connected_components(_cc_chain(spark, 2_000))
+        assert spark.conf.get(key) == prev
+        assert labels.rdd.getNumPartitions() <= slots
+        assert {r.cluster_id for r in labels.collect()} == {0}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    assert jobs
+    tasks = {
+        s: st.getStageInfo(s).numTasks
+        for j in jobs
+        for s in st.getJobInfo(j).stageIds
+        if st.getStageInfo(s) is not None
+    }
+    assert tasks and max(tasks.values()) <= slots, tasks
+
+    bad = _cc_chain(spark, 2_000, bad_row=1_999)
+    # the probe's rows evaluate cleanly: the error fires in the loop
+    assert bad.limit(dd._CC_DRIVER_MAX + 1).toArrow().num_rows == 2
+    with pytest.raises(Exception, match="cc-bad-row"):
+        dd.connected_components(bad)
+    assert spark.conf.get(key) == prev
+
+
 def test_components_driver_arrow_paths(spark):
     """r12 optimization guard: the driver union-find's boundary
     crossings are Arrow on both sides — a pyarrow-Table edge list in
